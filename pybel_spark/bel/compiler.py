@@ -191,9 +191,40 @@ class DocumentCompiler:
     def compile(self, lines):
         """Compile raw lines → dict of row lists (nodes, edges, warnings,
         metadata)."""
-        sanitized = sanitize_lines(lines)
-        documents, definitions, statements = split_sections(sanitized)
+        documents, definitions, statements = \
+            split_sections(sanitize_lines(lines))
+        state = self._header_state(documents, definitions)
+        state.parse_statements(statements)
+        return state.result()
 
+    def statement_contexts(self, lines):
+        """A page's header text (its SET DOCUMENT and DEFINE lines joined
+        by newlines) and its ``(statement, qualified)`` pairs, without
+        parsing any statement. ``qualified``: the control state
+        :meth:`compile` reaches at that line passes the guard a qualified
+        relation needs to emit an edge."""
+        documents, definitions, statements = \
+            split_sections(sanitize_lines(lines))
+        state = self._header_state(documents, definitions)
+        pairs = []
+        for number, line in statements:
+            if not is_control_line(line):
+                pairs.append(
+                    (line, state._context_warning(number, line) is None))
+                continue
+            try:
+                state._parse_statement_line(number, line)
+            except Exception:
+                # compile() records this as a warning: the line changes
+                # nothing past the point where it raised
+                pass
+        header = '\n'.join(line for _, line in documents + definitions)
+        return header, pairs
+
+    def _header_state(self, documents, definitions):
+        """A fresh per-document state under this header. Metadata,
+        definitions, header warnings and the term parser are built once
+        per distinct header and shared; the control state is always new."""
         key = (tuple(line for _, line in documents),
                tuple(line for _, line in definitions))
         cached = self._header_cache.get(key)
@@ -201,15 +232,13 @@ class DocumentCompiler:
             state = _CompileState(self)
             state.parse_document_section(documents)
             state.parse_definitions(definitions)
-            state.make_parsers()
+            state.make_term_parser()
             cached = (state.metadata, state.namespaces,
                       state.namespace_patterns, state.annotation_terms,
                       state.annotation_patterns, state.annotation_locals,
-                      list(state.warnings), state.term_parser)
+                      state.warnings, state.term_parser)
             if len(self._header_cache) < 256:  # bound executor memory
                 self._header_cache[key] = cached
-            state.parse_statements(statements)
-            return state.result()
 
         state = _CompileState(self)
         (state.metadata, state.namespaces, state.namespace_patterns,
@@ -217,8 +246,7 @@ class DocumentCompiler:
          state.annotation_locals, header_warnings, state.term_parser) = cached
         state.warnings = list(header_warnings)
         state.make_control()
-        state.parse_statements(statements)
-        return state.result()
+        return state
 
 
 class _CompileState:
@@ -300,7 +328,7 @@ class _CompileState:
                 values = re.findall(r'"((?:[^"\\]|\\.)*)"', rest)
                 self.annotation_locals[keyword] = set(values)
 
-    def make_parsers(self):
+    def make_term_parser(self):
         # the term parser is stateless after construction → cacheable per
         # header; ControlState is per-document (SET/UNSET state) → always fresh
         self.term_parser = BELTermParser(
@@ -311,7 +339,6 @@ class _CompileState:
             disallow_nested=self.config.disallow_nested,
             disallow_unqualified_translocations=self.config.disallow_unqualified_translocations,
         )
-        self.make_control()
 
     def make_control(self):
         self.control = ControlState(
@@ -407,16 +434,25 @@ class _CompileState:
 
         self._handle_qualified(number, line, subject, relation, obj)
 
+    def _context_warning(self, number, line):
+        """The warning a qualified relation on this line raises under the
+        current control state, or None when citation, evidence and every
+        required annotation are set (parse_bel.py:770-831)."""
+        if not self.control.citation_is_set:
+            return MissingCitationException(number, line, 0)
+        if not self.control.evidence:
+            return MissingSupportWarning(number, line, 0)
+        missing = self.control.get_missing_required_annotations()
+        if missing:
+            return MissingAnnotationWarning(number, line, 0, missing)
+        return None
+
     def _handle_qualified(self, number, line, subject, relation, obj):
         """Citation/evidence guards + qualified edge insertion
         (parse_bel.py:770-831)."""
-        if not self.control.citation_is_set:
-            raise MissingCitationException(number, line, 0)
-        if not self.control.evidence:
-            raise MissingSupportWarning(number, line, 0)
-        missing = self.control.get_missing_required_annotations()
-        if missing:
-            raise MissingAnnotationWarning(number, line, 0, missing)
+        exc = self._context_warning(number, line)
+        if exc is not None:
+            raise exc
 
         u_bel = self.ensure_node(subject['node'])
         v_bel = self.ensure_node(obj['node'])

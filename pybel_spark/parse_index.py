@@ -25,8 +25,9 @@ file://, hdfs://, s3a://):
   silently mixing two grammars in one index.
 
 Scale shape: the key is a 32-hex md5 of (header, statement, qualified) —
-uniformly distributed by construction, so the anti-join and the
-batch-key distinct shuffle short uniform strings with no skew. The
+uniformly distributed by construction, so the anti-join shuffles short
+uniform strings with no skew (the batch-key distinct before it shuffles
+whole stage-1 rows, header text included; see ``statement_keys``). The
 ``keys/`` scan reads exactly one 16-byte-entropy column; the index
 grows with the corpus's unique-statement space (orders of magnitude
 below document count on web corpora), and parse cost is paid once per
@@ -114,7 +115,7 @@ def _parse_and_write(novel: DataFrame, path: str, catalog_bc,
                      compiler_options, mode: str) -> None:
     """Parse the novel keys and persist results — triples FIRST, then
     keys (see the module crash contract)."""
-    _, _, parse_options = _dedup_parse_options(compiler_options)
+    parse_options = _dedup_parse_options(compiler_options)
     parse = _statement_parse_func(catalog_bc, parse_options,
                                   with_key_hash=True)
     triples = novel.select('key_hash', 'header', 'statement', 'qualified') \

@@ -39,6 +39,16 @@ def mask_non_bel_lines(text):
     ]
 
 
+def _page_texts(pdf):
+    """Each row's page text: the ``text`` column, else ``extract_text`` of
+    the ``html`` column if the batch has one, else None."""
+    htmls = pdf['html'] if 'html' in pdf else [None] * len(pdf)
+    for html, text in zip(htmls, pdf['text']):
+        if text is None and html is not None:
+            text = extract_text(bytes(html))
+        yield text
+
+
 def make_parse_func(catalog, compiler_options=None, spark=None):
     """Build the Arrow-batched parse function for ``mapInPandas``.
 
@@ -64,11 +74,8 @@ def make_parse_func(catalog, compiler_options=None, spark=None):
             out = {k: [] for k in (
                 'url', 'lang', 'text_sha256', 'n_lines', 'n_statements',
                 'nodes', 'edges', 'warnings')}
-            htmls = pdf['html'] if 'html' in pdf else [None] * len(pdf)
-            for url, html, text, lang in zip(
-                    pdf['url'], htmls, pdf['text'], pdf['lang']):
-                if text is None and html is not None:
-                    text = extract_text(bytes(html))
+            for url, text, lang in zip(
+                    pdf['url'], _page_texts(pdf), pdf['lang']):
                 if text is None:
                     text = ''
                 lines = mask_non_bel_lines(text)
@@ -111,10 +118,7 @@ def extract_triples(documents: DataFrame, catalog=None,
         compiler = DocumentCompiler(resources=catalog_bc.value, **options)
         for pdf in batches:
             subjects, predicates, objects = [], [], []
-            htmls = pdf['html'] if 'html' in pdf else [None] * len(pdf)
-            for html, text in zip(htmls, pdf['text']):
-                if text is None and html is not None:
-                    text = extract_text(bytes(html))
+            for text in _page_texts(pdf):
                 if text is None:
                     continue
                 result = compiler.compile(mask_non_bel_lines(text))
@@ -135,130 +139,41 @@ def extract_triples(documents: DataFrame, catalog=None,
 
 
 def _dedup_parse_options(compiler_options):
-    """Split compiler options into the stage-1 context-gate knobs and the
-    stage-3 re-parse options: the qualified-context gate (incl.
-    ``required_annotations``) is applied in stage 1 against the real
-    per-document state; the stage-3 re-parse runs under a dummy context
-    that deliberately can't satisfy annotation requirements, so they are
-    dropped there."""
+    """Compiler options of the stage-3 re-parse: ``required_annotations``
+    is dropped, because stage 1 already applied it in each statement's
+    real context and the stage-3 dummy context deliberately can't
+    satisfy it."""
     options = dict(compiler_options or {})
-    citation_clearing = options.get('citation_clearing', True)
-    required_annotations = options.get('required_annotations')
-    parse_options = dict(options)
-    parse_options.pop('required_annotations', None)
-    return citation_clearing, required_annotations, parse_options
+    options.pop('required_annotations', None)
+    return options
 
 
-def _statement_split_func(catalog_bc, citation_clearing,
-                          required_annotations):
+def _statement_split_func(catalog_bc, compiler_options):
     """Stage-1 mapInPandas function: split each page into its definition
     header + candidate statement lines, tagging each statement with its
     in-situ qualified-context flag (see :func:`extract_triples_deduped`
     for why this flag, and only this flag, of the surrounding control
     state reaches the triple)."""
+    import hashlib
+
     import pandas as pd
 
-    from .bel.compiler import _DEFINE_RE, _unquote, sanitize_lines, \
-        split_sections
-    from .bel.control import ControlState, is_control_line
+    options = compiler_options or {}
 
     def split(batches):
-        import hashlib as _hashlib
-
-        from .bel.grammar import Scanner
-
-        resources = catalog_bc.value
-        header_defs_cache = {}
-
-        def annotation_defs(header_md5, definitions):
-            """Annotation definitions exactly as _CompileState.parse_definitions
-            resolves them (first definition wins; failed defines leave the
-            keyword undefined). Memoized per distinct header."""
-            cached = header_defs_cache.get(header_md5)
-            if cached is not None:
-                return cached
-            terms, patterns, locals_ = {}, {}, {}
-            for _n, line in definitions:
-                m = _DEFINE_RE.match(line)
-                if m is None:
-                    continue
-                kind, keyword, how, rest = m.groups()
-                if kind != 'ANNOTATION':
-                    continue
-                if keyword in terms or keyword in patterns \
-                        or keyword in locals_:
-                    continue  # redefinition raises in compile → first wins
-                try:
-                    rest = rest.strip()
-                    if how == 'URL':
-                        terms[keyword] = resources.annotation(_unquote(rest))
-                    elif how == 'PATTERN':
-                        patterns[keyword] = re.compile(_unquote(rest))
-                    else:
-                        locals_[keyword] = set(
-                            re.findall(r'"((?:[^"\\]|\\.)*)"', rest))
-                except Exception:
-                    pass  # failed define → keyword stays undefined
-            cached = (terms, patterns, locals_)
-            if len(header_defs_cache) < 256:  # bound executor memory
-                header_defs_cache[header_md5] = cached
-            return cached
-
+        compiler = DocumentCompiler(resources=catalog_bc.value, **options)
         for pdf in batches:
             headers, stmts, quals = [], [], []
-            htmls = pdf['html'] if 'html' in pdf else [None] * len(pdf)
-            for html, text in zip(htmls, pdf['text']):
-                if text is None and html is not None:
-                    text = extract_text(bytes(html))
+            for text in _page_texts(pdf):
                 if text is None:
                     continue
-                lines = mask_non_bel_lines(text)
-                sanitized = sanitize_lines(lines)
-                documents_s, definitions, statements = \
-                    split_sections(sanitized)
-                header = '\n'.join(
-                    line for _, line in list(documents_s) + list(definitions))
-                header_md5 = _hashlib.md5(header.encode('utf8')).hexdigest()
-                terms, patterns, locals_ = \
-                    annotation_defs(header_md5, definitions)
-                control = ControlState(
-                    annotation_to_term=terms,
-                    annotation_to_pattern=patterns,
-                    annotation_to_local=locals_,
-                    citation_clearing=citation_clearing,
-                    required_annotations=required_annotations,
-                )
-                for number, line in statements:
-                    if is_control_line(line):
-                        # identical handling to compiler.parse_statements:
-                        # warnings abort the line but keep prior mutations
-                        s = Scanner(line, number)
-                        try:
-                            keyword = s.read_word()
-                            if keyword == 'SET':
-                                control.handle_set(s, line, number)
-                            else:
-                                control.handle_unset(s, line, number)
-                        except Exception:
-                            # Expected: BELSyntaxError subclasses raised by
-                            # handle_set/handle_unset on malformed control
-                            # lines (UndefinedAnnotation, MissingCitation,
-                            # InvalidCitation*, IllegalAnnotationValue,
-                            # ScannerError...). The real compile downstream
-                            # re-parses every line and RECORDS these as
-                            # warnings — here they only mean "this control
-                            # line mutates nothing", which is exactly what
-                            # the reference parser does after it logs.
-                            # Equivalence with the full compile is fuzzed in
-                            # tests (hostile-control corpus). Do not "fix"
-                            # this into a re-raise.
-                            pass
-                        continue
-                    qualified = bool(
-                        control.citation_is_set and control.evidence
-                        and not control.get_missing_required_annotations())
-                    headers.append(header_md5 + '\n' + header)
-                    stmts.append(line)
+                header, pairs = compiler.statement_contexts(
+                    mask_non_bel_lines(text))
+                header = hashlib.md5(header.encode('utf8')).hexdigest() \
+                    + '\n' + header
+                for stmt, qualified in pairs:
+                    headers.append(header)
+                    stmts.append(stmt)
                     quals.append(qualified)
             yield pd.DataFrame({'header': headers, 'statement': stmts,
                                 'qualified': quals})
@@ -272,15 +187,14 @@ def statement_keys(documents: DataFrame, catalog=None, compiler_options=None,
     — stages 1+2 of the dedup-parse pipeline, exposed for the cross-batch
     parse index (:mod:`pybel_spark.parse_index`). The header column is
     md5-prefixed exactly as :func:`extract_triples_deduped` stage 3
-    expects; the distinct shuffles short uniform strings only."""
+    expects. Every row carries its page's full header text (about 850 B
+    on the synthetic corpus, against about 40 B of statement), so the
+    header dominates the bytes the distinct shuffles."""
     if catalog is None and _catalog_bc is None:
         catalog = load_corpus_catalog()
-    citation_clearing, required_annotations, _ = \
-        _dedup_parse_options(compiler_options)
     catalog_bc = _catalog_bc if _catalog_bc is not None else \
         documents.sparkSession.sparkContext.broadcast(catalog)
-    split = _statement_split_func(
-        catalog_bc, citation_clearing, required_annotations)
+    split = _statement_split_func(catalog_bc, compiler_options)
     return (
         documents.select('html', 'text')
         .mapInPandas(
@@ -354,13 +268,15 @@ def extract_triples_deduped(documents: DataFrame, catalog=None,
     parse each DISTINCT (header, statement, qualified-flag) triple ONCE:
 
     stage 1 (cheap, map-only): split each page into header + candidate
-    statement lines, running the SAME ``ControlState`` machine the full
-    compiler runs (same annotation definitions, same warning-on-mutation
-    semantics) to tag each statement with its in-situ qualified flag;
-    stage 2: shuffle-distinct on md5(header)+statement+flag (short
-    strings, uniform keys); stage 3: parse the survivors — qualified ones
-    under a dummy citation/evidence, unqualified ones bare (so qualified
-    relations are rejected exactly as they were in situ). Parse cost
+    statement lines and tag each statement with its in-situ qualified
+    flag, using the compiler's own context code
+    (:meth:`DocumentCompiler.statement_contexts`: same header cache, same
+    control-line handling, same guard) without parsing any statement;
+    stage 2: shuffle-distinct on md5(header)+header+statement+flag
+    (uniform keys; the header text dominates the row); stage 3: parse the
+    survivors — qualified ones under a dummy citation/evidence,
+    unqualified ones bare (so qualified relations are rejected exactly as
+    they were in situ). Parse cost
     scales with UNIQUE content, not corpus size. The output equals
     :func:`extract_triples` on ANY corpus, including hostile pages with
     statements outside citation context and under ``required_annotations``
@@ -371,7 +287,7 @@ def extract_triples_deduped(documents: DataFrame, catalog=None,
 
     if catalog is None:
         catalog = load_corpus_catalog()
-    _, _, parse_options = _dedup_parse_options(compiler_options)
+    parse_options = _dedup_parse_options(compiler_options)
     catalog_bc = documents.sparkSession.sparkContext.broadcast(catalog)
     unique = statement_keys(documents, catalog, compiler_options,
                             _catalog_bc=catalog_bc)

@@ -1,7 +1,27 @@
 """SparkSession factory with scale-appropriate defaults."""
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+#: what Spark's size parser accepts: bytes, or a number with a binary
+#: unit suffix; a leading minus (``-1``) disables broadcast joins
+_SIZE_RE = re.compile(r'-?[0-9]+(?:b|[kmgtp]b?)?', re.IGNORECASE)
+
+
+def _broadcast_threshold():
+    """``spark.sql.autoBroadcastJoinThreshold`` from the
+    SPARK_GRAFT_BROADCAST_THRESHOLD environment variable (default 64 MB),
+    checked here so a malformed value names its source instead of
+    failing inside session build."""
+    value = os.environ.get('SPARK_GRAFT_BROADCAST_THRESHOLD')
+    if value is None:
+        return str(64 * 1024 * 1024)
+    if not _SIZE_RE.fullmatch(value.strip()):
+        raise ValueError(
+            'SPARK_GRAFT_BROADCAST_THRESHOLD must be a byte count or a '
+            "Spark size string such as '32m' or '-1', got {!r}".format(value))
+    return value.strip()
 
 
 def get_spark(app_name='pybel-spark', cores=None, shuffle_partitions=None,
@@ -36,8 +56,7 @@ def get_spark(app_name='pybel-spark', cores=None, shuffle_partitions=None,
         # smaller executors (r6 ADVICE): a 64 MB build side on a 1 GB
         # executor can OOM tasks that previously shuffle-joined safely
         .config('spark.sql.autoBroadcastJoinThreshold',
-                os.environ.get('SPARK_GRAFT_BROADCAST_THRESHOLD',
-                               str(64 * 1024 * 1024)))
+                _broadcast_threshold())
         .config('spark.driver.memory', os.environ.get('SPARK_DRIVER_MEMORY', '8g'))
         .config('spark.ui.enabled', 'false')
         .config('spark.sql.session.timeZone', 'UTC')

@@ -1,15 +1,25 @@
 """Cross-batch incremental parse index (pybel_spark/parse_index.py):
 batch-order invariance vs the full recompute, replay idempotence,
 zero-triple key memoization, and the options-fingerprint guard."""
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from pybel_spark import parse_index as PI
 from pybel_spark.corpus import CorpusSpec, generate_documents, wrap_html
-from pybel_spark.pipeline import extract_triples_deduped
+from pybel_spark.pipeline import extract_triples_deduped, statement_keys
 from pybel_spark.schemas import DOCUMENTS_SCHEMA
 
+from .conftest import load_golden
+
 N_DOCS = 80
+
+#: option sets whose statement keys are frozen in golden/statement_key_hashes
+KEY_HASH_OPTIONS = {
+    'default': None,
+    'required_annotations=Species': {'required_annotations': ['Species']},
+}
 
 
 @pytest.fixture(scope='module')
@@ -126,3 +136,56 @@ def test_qualified_flag_separates_keys_across_batches(spark, tmp_path):
     assert any(
         t['predicate'] == 'increasesAmountOf'
         for t in PI.triples_from_index(spark, path).collect())
+
+
+def _key_hash_corpus(spark):
+    """50 corpus pages; five more that change as a re-crawl changes a page
+    (own document name, own PMIDs), as text and as html-only rows; and
+    pages with statements outside a full citation/evidence/annotation
+    context."""
+    spec = CorpusSpec()
+    header = '\n'.join(spec.header)
+    rows = []
+    for page in range(0, 50, 10):
+        text = re.sub(r'(SET DOCUMENT Name = "[^"]*)"',
+                      r'\1 {}"'.format(page), spec.doc_text(page))
+        text = re.sub(r'(SET Citation = \{"PubMed","[^"]*",")([0-9]+)"',
+                      r'\g<1>{}\2"'.format(page), text)
+        html, text = (None, text) if page % 20 else (wrap_html(text), None)
+        rows.append(('https://recrawl.test/{}'.format(page), None, html, text,
+                     'en'))
+    cite = 'SET Citation = {"PubMed", "j", "123"}'
+    ev = 'SET Evidence = "e"'
+    stmt = 'p(HGNC:AKT1) increases p(HGNC:EGFR)'
+    stmt2 = 'p(HGNC:TP53) decreases p(HGNC:MDM2)'
+    hostile = [
+        [stmt, 'complex(p(HGNC:AKT1), p(HGNC:EGFR))'],
+        [cite, ev, 'UNSET Citation', stmt],
+        [cite, stmt],
+        [cite, ev, stmt],
+        [cite, ev, 'SET Species = "9606"', stmt2],
+        [cite, ev, 'SET Species = "bogus"', stmt2],
+    ]
+    rows += [('https://ctx.test/{}'.format(i), None, None,
+              '\n'.join([header] + lines) + '\n', 'en')
+             for i, lines in enumerate(hostile)]
+    return generate_documents(spark, 50, partitions=2).unionByName(
+        spark.createDataFrame(rows, DOCUMENTS_SCHEMA))
+
+
+def _key_hashes(docs, compiler_options):
+    return sorted(r['key_hash'] for r in PI._with_key_hash(
+        statement_keys(docs, compiler_options=compiler_options))
+        .select('key_hash').collect())
+
+
+def test_statement_key_hashes_are_frozen(spark):
+    """A parse index on disk is keyed by md5 of stage 1's exact (header,
+    statement, qualified) row, the md5-prefixed header text included; any
+    byte change there silently turns every stored key novel. The key set of
+    a fixed corpus must stay what it was when the golden was recorded."""
+    golden = load_golden('statement_key_hashes')
+    docs = _key_hash_corpus(spark)
+    assert set(golden) == set(KEY_HASH_OPTIONS)
+    for name, options in KEY_HASH_OPTIONS.items():
+        assert _key_hashes(docs, options) == golden[name], name

@@ -284,8 +284,12 @@ def test_deduped_required_annotations_equivalence(spark):
 def test_deduped_randomized_control_fuzz(spark):
     """Differential fuzz: random hostile control-line interleavings (SET /
     UNSET citation, evidence, annotations, statement-before-context,
-    UNSET_ALL clears) — the pre-parse dedup path must equal the per-document
+    UNSET_ALL clears), then the same under hostile headers (an annotation
+    redefined — the first definition wins; an annotation URL the catalog
+    lacks — the keyword stays undefined) with annotation values outside
+    their lists — the pre-parse dedup path must equal the per-document
     path on every seeded corpus."""
+    import itertools
     import random
 
     from pybel_spark.corpus import CorpusSpec, wrap_html
@@ -323,6 +327,46 @@ def test_deduped_randomized_control_fuzz(spark):
                 lines.append(rng.choice(controls))
             else:
                 lines.append(rng.choice(statements))
+        rows.append(('https://fuzz.test/{}'.format(page), None,
+                     wrap_html('\n'.join(lines) + '\n'), None, 'en'))
+    missing_url = 'DEFINE ANNOTATION Species AS URL "file://missing.belanno"'
+    no_species = [ln for ln in spec.header if 'Species' not in ln]
+    species_list = 'DEFINE ANNOTATION Species AS LIST {"mouse"}'
+    hostile_headers = [
+        header + '\n' + species_list,
+        '\n'.join(no_species + [species_list] + [
+            ln for ln in spec.header if 'Species' in ln]),
+        header + '\nDEFINE ANNOTATION TESTAN1 AS LIST {"9"}',
+        '\n'.join(no_species + [missing_url]),
+        '\n'.join(no_species + [missing_url, species_list]),
+        # no term/pattern annotation left: every annotation key is accepted
+        '\n'.join([ln for ln in no_species if 'ANNOTATION' not in ln]
+                  + [missing_url]),
+    ]
+    hostile_controls = controls + [
+        'SET Species = "mouse"',
+        'SET Species = "0000"',
+        'SET Species = {"9606", "bogus"}',
+        'SET TESTAN1 = "9"',
+        'SET TESTAN1 = "1"',
+        'SET CellLine = "not-a-cell-line"',
+    ]
+    # these pages open in a full citation/evidence context, so their
+    # annotation lines decide the flag under required_annotations; half of
+    # their statements occur once in the corpus (any dbSNP:rs<n> matches
+    # the header's pattern namespace), so a wrong flag on that line cannot
+    # hide behind the same triple from another page
+    unique = itertools.count()
+    for page in range(24, 84):
+        lines = [rng.choice(hostile_headers), controls[0], controls[3]]
+        for _ in range(rng.randint(3, 14)):
+            if rng.random() < 0.5:
+                lines.append(rng.choice(hostile_controls))
+            elif rng.random() < 0.5:
+                lines.append(rng.choice(statements))
+            else:
+                lines.append('g(dbSNP:rs{0}) increases g(dbSNP:rs{0}0)'
+                             .format(next(unique)))
         rows.append(('https://fuzz.test/{}'.format(page), None,
                      wrap_html('\n'.join(lines) + '\n'), None, 'en'))
     docs = spark.createDataFrame(rows, DOCUMENTS_SCHEMA)
